@@ -1,17 +1,16 @@
-"""Restartable staged curation funnel — pretrain_prep with parquet
-staging tables instead of localCheckpoint.
+"""Restartable staged curation funnel — the one implementation of the
+five curation stages.
 
-`queries/catalog.py:pretrain_prep` bounds its plan with per-stage
-``localCheckpoint`` — right for a single interactive run, but checkpoint
-blocks die with the session. On a cluster the same stage boundary should
-be a PERSISTED staging table: a 10-hour curation run that fails in stage
-5 must resume from stage 4's output, not re-shuffle 100 TB. This module
-is that production shape, runnable and tested here:
+Every stage boundary is a PERSISTED staging table: a 10-hour curation
+run that fails in stage 5 must resume from stage 4's output, not
+re-shuffle 100 TB. The catalog's ``pretrain_prep`` query is a thin
+wrapper that runs this funnel into a scratch directory and returns its
+report. The staging contract:
 
 - every stage is a TRANSACTIONAL table (``sinks/txlog.py``) at
   ``<workdir>/NN_name/``, committed with ``tx_write(mode="overwrite")``
   and READ BACK via ``tx_read`` for the next stage (the read is the
-  lineage barrier — same plan-size bound as the checkpoint, plus
+  lineage barrier that bounds each stage's plan size, plus
   durability). The manifest commit is the atomicity point: a writer
   killed between the parquet write and the commit leaves only
   unreferenced files, so a resumed run sees the previous committed
@@ -24,19 +23,17 @@ is that production shape, runnable and tested here:
 - once any stage recomputes, every LATER stage recomputes too (a resumed
   run can never mix a new upstream with stale downstream outputs);
 - the funnel report (stage → surviving docs + token mass) is derived
-  from the staged tables and matches the single-DAG ``pretrain_prep``
-  output row-for-row (pinned by tests/test_funnel.py).
+  from the staged tables.
 
-Stage semantics are pretrain_prep's exactly: quality gate → exact dedup
-→ MinHash near-dup removal (32 hashes / 8 bands, threshold 0.5) →
-benchmark decontamination (doc_id%10==0 stand-in slice, 3-gram overlap)
-→ greedy per-language sequence packing (512-token budget).
+Stages: quality gate → exact dedup → MinHash near-dup removal (32
+hashes / 8 bands, threshold 0.5) → benchmark decontamination
+(doc_id%10==0 stand-in slice, 3-gram overlap) → greedy per-language
+sequence packing (512-token budget).
 """
 
 from __future__ import annotations
 
 import os
-from contextlib import nullcontext as _nullcontext
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -136,7 +133,7 @@ def _decontaminate(neardeduped: DataFrame, docs: DataFrame) -> DataFrame:
     # bench_grams IS bounded (by the benchmark suite, not the corpus) —
     # its broadcast hint is safe; the contaminated-id list is not, so its
     # anti-join strategy stays AQE-decided.
-    # Grams meet as 8-byte xxhash64 longs, not strings (see pretrain_prep):
+    # Grams meet as 8-byte xxhash64 longs, not strings:
     # smaller broadcast set, cheaper comparisons; a ~1e-9 hash collision
     # only ever drops an extra doc (conservative for decontamination).
     bench_grams = (
@@ -177,7 +174,6 @@ def run_staged_funnel(
     block_cols: list[str] | str | None = "auto",
     max_collisions_per_doc: float | None = DEFAULT_NEARDUP_BUDGET,
     cross_block_recovery: bool = False,
-    auto_partition: bool = True,
 ) -> dict:
     """Run (or resume) the staged funnel under `workdir`.
 
@@ -190,13 +186,12 @@ def run_staged_funnel(
     everything downstream on resume. The census budget covers the
     recovery's rep pass as well (the primitive threads it through).
 
-    ``auto_partition`` (r14, closing the r13 `weak`): size the near-dedup
-    stage's shuffle partitions and scan splits with
-    ``dedup.minhash_partition_plan`` — n_docs and on-disk bytes read for
-    FREE from the exact_dedup stage's txlog manifest (zero extra jobs) —
-    applied scoped to the stage and restored after
-    (``dedup.applied_partition_plan``; monotone toward finer tasks, a
-    no-op at bench scale). The 4M ladder measured the failure this
+    The near-dedup stage always runs under ``dedup.minhash_partition_plan``
+    (r14): shuffle partitions and scan splits are sized from n_docs and
+    on-disk bytes read for FREE from the exact_dedup stage's txlog
+    manifest (zero extra jobs), applied scoped to the stage and restored
+    after (``dedup.applied_partition_plan``; monotone toward finer tasks,
+    a no-op at bench scale). The 4M ladder measured the failure this
     prevents: ``UNABLE_TO_ACQUIRE_MEMORY`` at the 32-partition session
     default, double ``AGGREGATE_OUT_OF_MEMORY`` at default 128 MB splits
     (PERF.md r12). Geometry does not change results, so it is NOT part
@@ -219,7 +214,7 @@ def run_staged_funnel(
 
     Returns {"tables": {stage: DataFrame}, "report": DataFrame,
     "computed": [stage names actually recomputed this run]} — `report`
-    has the same (stage_no, stage, docs, tokens) rows as pretrain_prep.
+    has one (stage_no, stage, docs, tokens) row per stage, raw included.
 
     Resume safety: every stage is a txlog table whose commit ``meta``
     records the input fingerprint and the stage's parameters. A stage
@@ -301,16 +296,12 @@ def run_staged_funnel(
     exact = materialize(2, "exact_dedup", lambda: _exact_dedup(gated))
     # r14: geometry for the dedup stage from the exact stage's manifest —
     # (rows, bytes) are driver-side commit metadata, zero Spark jobs
-    if auto_partition:
-        stats = txlog.tx_stats(_stage_dir(workdir, 2, "exact_dedup"))
-        geometry = dd.applied_partition_plan(
-            spark,
-            max(1, stats["rows"]),
-            avg_doc_bytes=(stats["bytes"] // stats["rows"]) if stats["rows"] else None,
-        )
-    else:
-        geometry = _nullcontext()
-    with geometry:
+    stats = txlog.tx_stats(_stage_dir(workdir, 2, "exact_dedup"))
+    with dd.applied_partition_plan(
+        spark,
+        max(1, stats["rows"]),
+        avg_doc_bytes=(stats["bytes"] // stats["rows"]) if stats["rows"] else None,
+    ):
         neardeduped = materialize(
             3,
             "near_dedup",

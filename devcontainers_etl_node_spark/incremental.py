@@ -30,7 +30,6 @@ from __future__ import annotations
 
 import json
 import os
-from contextlib import nullcontext as _nullcontext
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -92,7 +91,6 @@ def run_incremental_dedup(
     max_collisions_per_doc: float | None = None,
     persist_shingles: bool = False,
     store_buckets: int | None = None,
-    auto_partition: bool = True,
 ) -> dict:
     """Dedup one ingest batch against the committed signature snapshot.
 
@@ -130,9 +128,9 @@ def run_incremental_dedup(
     periodically thereafter: steps between compactions read base +
     recent deltas.
 
-    ``auto_partition`` (r14, closing the r13 `weak`): run the band join +
-    verify under :func:`~devcontainers_etl_node_spark.operators.dedup.applied_partition_plan`
-    sized to history + batch — history row count comes FREE from the
+    The band join + verify always run under
+    :func:`~devcontainers_etl_node_spark.operators.dedup.applied_partition_plan`
+    (r14) sized to history + batch — history row count comes FREE from the
     committed manifest's ``_stats`` (recorded at each commit; a pre-r14
     manifest falls back to one cheap count over the ~128 B/doc signature
     table), the batch is counted once (one batch-sized scan, ≪ the
@@ -309,37 +307,23 @@ def run_incremental_dedup(
     # — checkpoint blocks canonicalize identically everywhere and release
     # via GC when the step's frames drop.
     pin_store = store_buckets and cur is not None
-    if auto_partition:
-        if n_hist is None:  # pre-r14 manifest: one count over ~128 B/doc
-            # rows (legacy stores only; the store is re-read once more by
-            # the in-scope pin below — post-r14 manifests carry _stats
-            # and never hit this)
-            n_hist = existing_sigs.count()
-        n_new = new_docs.count()
-        geometry = dd.applied_partition_plan(
-            spark,
-            max(1, n_hist + n_new),
-            avg_doc_bytes=_avg_file_bytes_per_row(new_docs, n_new),
-            # bucketed stores are many small files; without a realistic
-            # open cost the plan's shrunk splits degenerate to
-            # one-task-per-file (measured 10x step blowup, PERF.md r14)
-            open_cost_bytes=65536 if store_buckets else None,
-        )
-        n_total = n_hist + n_new
-    else:
-        geometry = _nullcontext()
-        # keep the committed doc count honest even when the caller manages
-        # partitioning: a batch committed without refreshing ``_stats``
-        # would make every LATER auto_partition run size its plan from a
-        # count that silently excludes this batch — the undercount never
-        # self-heals and reproduces the geometry failure auto_partition
-        # exists to prevent. One column-pruned count of the batch pays for
-        # that; when n_hist itself is unknowable (pre-r14 manifest) leave
-        # ``_stats`` absent rather than commit a wrong number — the next
-        # auto run then falls back to counting the store.
-        n_total = (n_hist + new_docs.count()) if n_hist is not None else None
+    if n_hist is None:  # pre-r14 manifest: one count over ~128 B/doc
+        # rows (legacy stores only; the store is re-read once more by the
+        # in-scope pin below — post-r14 manifests carry _stats and never
+        # hit this)
+        n_hist = existing_sigs.count()
+    n_new = new_docs.count()
+    n_total = n_hist + n_new
     step_stats: dict = {}
-    with geometry:
+    with dd.applied_partition_plan(
+        spark,
+        max(1, n_total),
+        avg_doc_bytes=_avg_file_bytes_per_row(new_docs, n_new),
+        # bucketed stores are many small files; without a realistic open
+        # cost the plan's shrunk splits degenerate to one-task-per-file
+        # (measured 10x step blowup, PERF.md r14)
+        open_cost_bytes=65536 if store_buckets else None,
+    ):
         if pin_store:
             existing_sigs = existing_sigs.localCheckpoint(eager=True)
         pairs, merged_sigs, release = dd.minhash_incremental_pairs(
@@ -406,10 +390,9 @@ def run_incremental_dedup(
             )
         release()
         pairs.write.mode("overwrite").parquet(os.path.join(workdir, "pairs", f"run_{version}"))
-    if n_total is not None:
-        # committed doc count: the NEXT run's history size, read back for
-        # free (no count job) by its auto_partition sizing
-        params = {**params, "_stats": {"n_docs": int(n_total)}}
+    # committed doc count: the NEXT run's history size, read back for free
+    # (no count job) by its partition-plan sizing
+    params = {**params, "_stats": {"n_docs": int(n_total)}}
     _write_manifest(mpath, params)
     _commit_current(workdir, version)
     out = {"pairs": pairs, "version": version, "n_pairs": pairs.count()}

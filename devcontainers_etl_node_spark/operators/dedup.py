@@ -416,9 +416,9 @@ def applied_partition_plan(
     32-partition session default and a double ``AGGREGATE_OUT_OF_MEMORY``
     at default 128 MB scan splits (PERF.md r12), and the rule that fixes
     both was planner output only — no pipeline entry point applied it.
-    ``funnel.run_staged_funnel``, ``queries.catalog:pretrain_prep`` and
-    ``incremental.run_incremental_dedup`` now run their dedup stage inside
-    this context by default.
+    ``funnel.run_staged_funnel`` (and so ``queries.catalog:pretrain_prep``)
+    and ``incremental.run_incremental_dedup`` always run their dedup stage
+    inside this context.
 
     The application is MONOTONE toward finer tasks, never coarser:
     shuffle partitions only ever rise above the session value, and
@@ -664,8 +664,8 @@ def minhash_lsh_pairs(
     verified = _exact_jaccard_verify_from_base(cand, base, shingle_k, threshold)
     # Materialize the (small) verified pair list in ONE action.
     # localCheckpoint also truncates the lineage, so callers that embed
-    # this result in a bigger DAG (pretrain_prep) don't drag the whole
-    # LSH plan along.
+    # this result in a bigger DAG (the funnel's near-dedup stage) don't
+    # drag the whole LSH plan along.
     out = verified.localCheckpoint(eager=True)
     if cross_block_recovery:
         # r15 (verdict item 8): the recovery pass no longer receives (or
@@ -1110,7 +1110,10 @@ def minhash_incremental_pairs(
     # new_docs rows, so a duplicate id would fan out the banded batch —
     # inflating the census, the budget denominator, and the band join —
     # where the unblocked path's signature groupBy collapses it. The two
-    # checks ride ONE union action (no extra job per cadence step).
+    # checks ride ONE union action (no extra job per cadence step),
+    # ordered so the raised error and its example ids are deterministic: a
+    # batch with both violations raises the committed-id error
+    # ("committed" < "dup_in_batch").
     bad = new_sigs.join(existing_sigs.select("_id"), "_id", "left_semi").select(
         "_id", F.lit("committed").alias("_why")
     )
@@ -1121,7 +1124,7 @@ def minhash_incremental_pairs(
             .filter(F.col("_c") > 1)
             .select("_id", F.lit("dup_in_batch").alias("_why"))
         )
-    bad_rows = bad.limit(5).collect()
+    bad_rows = bad.orderBy("_why", "_id").limit(5).collect()
     dup_ids = [r._id for r in bad_rows if r._why == "committed"]
     batch_dups = [r._id for r in bad_rows if r._why == "dup_in_batch"]
     if dup_ids:

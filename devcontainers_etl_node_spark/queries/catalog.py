@@ -23,10 +23,12 @@ vocabularies), never on sf-proportional tables (customer/part/supplier).
 
 from __future__ import annotations
 
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from devcontainers_etl_node_spark import funnel
 from devcontainers_etl_node_spark.catalog import table
 from devcontainers_etl_node_spark.operators import dedup, membership, similarity, text as textops
 
@@ -7700,7 +7702,7 @@ def quality_classifier(spark: SparkSession, sf: str) -> DataFrame:
     # training summary whose DataFrame references the session, and
     # serializing it into the transform closure trips
     # NotSerializableException(ObservationManager) whenever any observe()
-    # query ran earlier in the session (pretrain_prep does). The dot
+    # query ran earlier in the session. The dot
     # product is the same math, and the scoring path this ships at 100 TB
     # is expression-only anyway — no model object on the executors.
     w = F.array(*[F.lit(float(c)) for c in model.coefficients])
@@ -7974,293 +7976,28 @@ def xml_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     return parsed.select("event_id", F.col("s.et").alias("et"), F.col("s.uid").alias("uid"))
 
 
-_DEFAULT = object()  # sentinel: funnel.DEFAULT_NEARDUP_BUDGET, bound at call time
-
-
 @query("pretrain_prep")  # minhash stage is non-SQL — rows-only; invariants in tests
 def pretrain_prep(
     spark: SparkSession,
     sf: str,
     block_cols: list[str] | str | None = "auto",
-    max_collisions_per_doc: float | None = _DEFAULT,  # type: ignore[assignment]
-    auto_partition: bool = True,
-    fuse_report_stages: bool = True,
+    max_collisions_per_doc: float | None = funnel.DEFAULT_NEARDUP_BUDGET,
 ) -> DataFrame:
-    """The full pretraining-data preparation funnel as ONE lazy DAG — the
-    flagship composition of the engine's LLM operators, end to end:
-
-      1. quality gate     — length + quality-score thresholds (map-side)
-      2. exact dedup      — sha2 groupBy, deterministic survivor
-      3. near-dup removal — MinHash LSH pairs, higher id dropped
-      4. contamination    — docs sharing any 3-gram with the benchmark
-                            slice (doc_id%10==0 stand-in) are removed via
-                            an AQE-decided anti-join (drop lists are
-                            corpus-proportional — never force-broadcast)
-      5. sequence packing — greedy per-language context-window fill
-                            (applyInPandas, 512-token budget)
-
-    Output: one row per pipeline stage with surviving docs + token mass —
-    the funnel report a data team reads after every corpus build. Every
-    stage is the already-tested operator (dedup.py / similarity / packing
-    .py).
-
-    Plan-size control (round-3 change; round-4 fuses the first three
-    stages into one materialization job whose ``observe`` aggregates
-    produce the raw/gated report rows for free): each remaining funnel
-    stage is ``localCheckpoint(eager=True)``-materialized at its
-    boundary, so a downstream stage references a truncated lineage
-    instead of the full upstream DAG. Without this the single lazy DAG re-referenced the
-    whole upstream lineage per stage (PLANS.md recorded 2 257 printed
-    exchanges; 57.7 s at sf0.01, all analysis/codegen) — and plan size
-    grew multiplicatively in funnel DEPTH, the real scale axis of a
-    curation pipeline. With per-stage materialization the plan is
-    bounded per stage and each stage computes ONCE. On a cluster the
-    same boundary becomes a persisted staging table (parquet), which
-    also buys restartability — implemented as funnel.run_staged_funnel
-    (crash-resume from completed stages, downstream staleness tracked;
-    report pinned row-for-row equal to this query in tests/
-    test_funnel.py); localCheckpoint is the single-node equivalent
-    (executor-local storage, no lineage).
-    Deterministic but not SQL-expressible (MinHash) → rows-only;
-    tests/test_quality_gates.py pins funnel monotonicity + packing budget."""
-    from pyspark.sql import Window
-    from pyspark.sql.observation import Observation
-
-    from devcontainers_etl_node_spark.operators import dedup as dd, packing, text as tx
-    from devcontainers_etl_node_spark.operators.skew import spread
-
-    # spread once up front: every funnel stage (quality HOFs, shingling,
-    # stage_row token sums) is CPU-bound, and the small-SF scan is a
-    # single split — see operators/skew.py:spread (no-op at real scale)
-    #
-    # Round-4 fusion, take 2: the annotate pass (token_count + quality
-    # HOFs), the gate filter, and the exact-dedup window now run inside
-    # ONE materialization job ending at a single checkpoint. The raw and
-    # gated stage rows fall out of the SAME job via ``observe`` — the
-    # aggregates ride along with the rows as they stream past, so the
-    # funnel never materializes (or re-reads) the pre-gate corpus: two
-    # checkpoints and two report jobs collapse into zero extra passes.
-    # At 100 TB that is one full-corpus write (the dominated cost of a
-    # curation pass) saved outright.
-    from devcontainers_etl_node_spark import funnel as _funnel
-
-    # r14 (advice fix): the blocked+gated defaults now have the same
-    # informed opt-out run_staged_funnel ships — a legitimately
-    # duplicate-heavy corpus (the main target of dedup) can raise the
-    # budget or pass None instead of editing the source.
-    if max_collisions_per_doc is _DEFAULT:
-        max_collisions_per_doc = _funnel.DEFAULT_NEARDUP_BUDGET
-
-    obs = Observation()
-    _docs = table(spark, sf, "documents")
-    # the composite near-dedup block key, restricted to columns the
-    # corpus actually carries (a source-less corpus blocks by lang alone
-    # — the graceful degradation default_block_cols encodes)
-    if block_cols == "auto":
-        _block_cols = _funnel.default_block_cols(_docs)
-    elif isinstance(block_cols, str):
-        # a bare string is one column name, not an iterable of characters
-        _block_cols = [block_cols]
-    else:
-        _block_cols = list(block_cols or [])
-    ann = spread(_docs).select(
-        "doc_id",
-        "text",
-        "lang",  # column-pruned before the checkpoint: only what the
-        *[c for c in _block_cols if c not in ("doc_id", "text", "lang")],
-        tx.token_count("text").alias("n_tokens"),  # funnel reads
-        ((F.length("text") >= 50) & (tx.quality_score("text") >= 0.2)).alias("_gate"),
-    ).observe(
-        obs,
-        F.count(F.lit(1)).alias("raw_docs"),
-        F.coalesce(F.sum("n_tokens"), F.lit(0)).alias("raw_tokens"),
-        F.count_if(F.col("_gate")).alias("gated_docs"),
-        F.coalesce(F.sum(F.when(F.col("_gate"), F.col("n_tokens"))), F.lit(0)).alias("gated_tokens"),
-    )
-    def _stage_obs() -> tuple[Observation, list]:
-        o = Observation()
-        return o, [
-            F.count(F.lit(1)).alias("docs"),
-            F.coalesce(F.sum("n_tokens"), F.lit(0)).alias("tokens"),
-        ]
-
-    obs_exact, m_exact = _stage_obs()
-    _h = F.sha2(F.col("text"), 256)
-    _w = Window.partitionBy(_h).orderBy(F.col("doc_id"))
-    exact = (
-        ann.filter("_gate")
-        .withColumn("_rn", F.row_number().over(_w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_gate")
-        .observe(obs_exact, *m_exact)
-        .localCheckpoint(eager=True)
-    )
-    got = obs.get  # both observations populated by the checkpoint job above
-    # minhash_lsh_pairs localCheckpoints its own (small) pair output.
-    # 32/8 library default (r11 flip, with minhash_neardup): the r10
-    # ladder measured 16/4's inactive est-prune + O(n^2) collision floor;
-    # 32/8 is 2.2-2.5x faster at 250k docs with higher recall (PERF.md).
-    # COMPOSITE-BLOCKED + budget-gated near-dedup (r13, closing the r12
-    # `weak`): within-block dedup is the CCNet/RefinedWeb contract (a
-    # translated doc is not a training dup), and the 4M ladder proved
-    # lang ALONE keeps the quadratic floor exponent (alpha -> 0.96) while
-    # ~100 family-consistent blocks track the linear signature stage —
-    # so the pipeline defaults to (lang, source) with the enforced
-    # census budget (funnel.DEFAULT_NEARDUP_BUDGET rationale), identical
-    # to funnel.run_staged_funnel's defaults (parity pinned in
-    # tests/test_funnel.py).
-    # r14 (closing the r13 `weak`): the minhash stage — the measured 4M
-    # OOM site — runs under the partition plan sized to the exact-dedup
-    # survivor count, which the observe aggregates just produced for FREE
-    # (no count job; avg bytes unavailable here — the stage reads the
-    # localCheckpoint, not a file scan, so splits don't apply). Scoped
-    # set-then-restore; no-op at bench scale (n <= 20k*32).
-    from contextlib import nullcontext as _nullcontext
-
-    _geom = (
-        dd.applied_partition_plan(spark, max(1, int(obs_exact.get["docs"])))
-        if auto_partition
-        else _nullcontext()
-    )
-    with _geom:
-        pairs = dd.minhash_lsh_pairs(
-            exact,
-            threshold=0.5,
-            block_cols=_block_cols or None,
-            max_collisions_per_doc=max_collisions_per_doc,
-        )
-    # Drop lists (near-dup ids, contaminated ids) are CORPUS-PROPORTIONAL:
-    # at 100 TB a near-dup drop list can be billions of ids, and a forced
-    # F.broadcast would OOM the driver. No hint — AQE broadcasts while the
-    # list fits (it does at any test sf) and falls back to a shuffled
-    # left-anti at scale. The benchmark gram set keeps its hint: it is
-    # bounded by the BENCHMARK size, not the corpus.
-    # near_drop skips distinct(): anti joins have set semantics on the
-    # right side, and a doc id repeats only once per extra near-dup
-    # partner (low dup factor — the dedup shuffle costs more than it
-    # saves). bench_grams and contaminated KEEP their distinct(): those
-    # dup factors are ~grams-per-doc (dozens), and the distinct's
-    # map-side partial aggregation is what shrinks the broadcast/shuffle
-    # volume at corpus scale.
-    near_drop = pairs.select(F.col("id_b").alias("doc_id"))
-    obs_near, m_near = _stage_obs()
-    if not fuse_report_stages:
-        # r14 two-checkpoint form, kept behind the flag for A/B and for
-        # callers that want a materialized near-dedup stage table
-        neardeduped = (
-            exact.join(near_drop, "doc_id", "left_anti")
-            .observe(obs_near, *m_near)
-            .localCheckpoint(eager=True)
-        )
-    # Grams meet as 8-byte xxhash64 longs, not strings (the
-    # substring_dup_stats trick): the broadcast set and every comparison
-    # shrink from ~avg-gram-length bytes to 8, at a ~1e-9 collision rate
-    # whose only effect is an extra dropped doc (conservative for
-    # decontamination).
-    # The benchmark slice reads a FRESH column-pruned scan (doc_id, text
-    # only), not the checkpointed funnel table: the checkpoint now holds
-    # only gate+dedup survivors, and the benchmark membership must come
-    # from the raw corpus. Grams are generated by the codegen'd
-    # position-explode (split once, explode start offsets, concat_ws a
-    # slice) rather than the interpreted word_shingles HOF — identical
-    # gram multiset; the downstream distinct/semi-join dedups it.
-    def _gram_rows(src: DataFrame, with_id: bool) -> DataFrame:
-        toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-        exploded = src.select(
-            *(["doc_id"] if with_id else []),
-            toks.alias("_t"),
-        ).select(
-            *(["doc_id"] if with_id else []),
-            "_t",
-            F.explode(
-                F.sequence(F.lit(0), F.greatest(F.size("_t") - 3, F.lit(0)))
-            ).alias("_i"),
-        )
-        gram_h = F.xxhash64(F.concat_ws(" ", F.slice("_t", F.col("_i") + 1, 3))).alias("gram_h")
-        return exploded.select(*(["doc_id"] if with_id else []), gram_h)
-
-    bench_grams = (
-        _gram_rows(
-            table(spark, sf, "documents")
-            .filter(F.col("doc_id") % 10 == 0)
-            .select("doc_id", "text"),
-            with_id=False,
-        )
-        .distinct()
-    )
-    obs_clean, m_clean = _stage_obs()
-    if fuse_report_stages:
-        # r15 (verdict item 3, guide §1.2): the near_dedup → decontaminated
-        # boundary no longer pays its own checkpoint ACTION (~4 AQE jobs +
-        # a full stage-table write). Both observes ride ONE materialization
-        # job: the near-dedup anti-join streams through obs_near, the
-        # decontamination anti-join through obs_clean, and the single
-        # localCheckpoint at the end populates both. Metric exactness by
-        # construction — each observe node appears exactly ONCE in the
-        # plan (the double-count risk that deferred this in r14 came from
-        # referencing the observed subtree twice; here the gram branch
-        # derives from the CHECKPOINTED `exact` table instead, so nothing
-        # upstream of an observe is re-referenced), and every near-dedup
-        # survivor row flows through obs_near before the downstream filter
-        # (filters do not push through CollectMetrics — pinned, together
-        # with value parity vs the unfused form, in tests/test_funnel.py).
-        # The gram branch reading `exact` rather than the near-dedup
-        # survivors adds grams of near-DROPPED docs to the semi-join:
-        # `contaminated` may then contain near-dropped ids, but the anti-
-        # join's stream side already lacks them, so `clean` is row-for-row
-        # identical — and the branch now reads a materialized checkpoint
-        # instead of re-running the anti-join a second time at scale.
-        doc_grams = _gram_rows(exact.filter(F.col("doc_id") % 10 != 0), with_id=True)
-        contaminated = (
-            doc_grams.join(F.broadcast(bench_grams), "gram_h", "left_semi")
-            .select("doc_id")
-            .distinct()
-        )
-        clean = (
-            exact.join(near_drop, "doc_id", "left_anti")
-            .observe(obs_near, *m_near)
-            .filter(F.col("doc_id") % 10 != 0)
-            .join(contaminated, "doc_id", "left_anti")
-            .observe(obs_clean, *m_clean)
-            .localCheckpoint(eager=True)
-        )
-    else:
-        doc_grams = _gram_rows(
-            neardeduped.filter(F.col("doc_id") % 10 != 0), with_id=True
-        )
-        contaminated = (
-            doc_grams.join(F.broadcast(bench_grams), "gram_h", "left_semi")
-            .select("doc_id")
-            .distinct()
-        )
-        clean = (
-            neardeduped.filter(F.col("doc_id") % 10 != 0)
-            .join(contaminated, "doc_id", "left_anti")
-            .observe(obs_clean, *m_clean)
-            .localCheckpoint(eager=True)
-        )
-
-    packed = packing.pack_sequences(clean, "n_tokens", "lang", "doc_id", max_tokens=512)
-    packed_summary = packed.agg(
-        F.lit(5).alias("stage_no"),
-        F.lit("packed").alias("stage"),
-        F.countDistinct(F.concat_ws("|", "group", "seq_id")).alias("docs"),
-        F.sum("n_tokens").alias("tokens"),
-    )
-
-    # Every report row except "packed" was observed during its stage's own
-    # materialization job — zero extra passes over any stage table.
-    observed_rows = spark.createDataFrame(
-        [
-            (0, "raw", got["raw_docs"], got["raw_tokens"]),
-            (1, "quality_gate", got["gated_docs"], got["gated_tokens"]),
-            (2, "exact_dedup", obs_exact.get["docs"], obs_exact.get["tokens"]),
-            (3, "near_dedup", obs_near.get["docs"], obs_near.get["tokens"]),
-            (4, "decontaminated", obs_clean.get["docs"], obs_clean.get["tokens"]),
-        ],
-        "stage_no INT, stage STRING, docs BIGINT, tokens BIGINT",
-    )
-    return observed_rows.unionByName(packed_summary).orderBy("stage_no")
+    """The pretraining-data curation funnel (quality gate → exact dedup →
+    MinHash near-dup removal → benchmark decontamination → sequence
+    packing) over the ``documents`` table: ``funnel.run_staged_funnel``
+    run into a scratch directory. Output: one row per stage with
+    surviving docs + token mass, collected to the driver before the
+    scratch stage tables are removed. Deterministic but not
+    SQL-expressible (MinHash) → rows-only; tests/test_quality_gates.py
+    pins funnel monotonicity + packing budget."""
+    docs = table(spark, sf, "documents")
+    with tempfile.TemporaryDirectory() as workdir:
+        report = funnel.run_staged_funnel(
+            spark, docs, workdir,
+            block_cols=block_cols, max_collisions_per_doc=max_collisions_per_doc,
+        )["report"]
+        return spark.createDataFrame(report.collect(), report.schema)
 
 
 @query(

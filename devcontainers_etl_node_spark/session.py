@@ -9,13 +9,25 @@ Scale notes (100 TB / 1000-executor design stance):
   ~2-3x total cores or rely on AQE coalescing (enabled here).
 - AQE skew-join handling is enabled so hot keys split automatically.
 - maxPartitionBytes left at default 128m — right for large parquet scans.
+- the driver heap is half the host's physical memory, capped at 48g: the
+  local-mode driver JVM shares the host with its Python workers, and a
+  fixed 48g heap on a 15 GB host let G1 grow the JVM until the kernel
+  OOM-killed it.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import SparkSession
 
 from devcontainers_etl_node_spark.config import DEFAULT, EngineConfig
+
+
+def driver_memory() -> str:
+    """The ``spark.driver.memory`` value: half of physical memory, at most 48g."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(48 << 10, phys // 2 >> 20)}m"
 
 
 def get_spark(config: EngineConfig | None = None) -> SparkSession:
@@ -29,7 +41,7 @@ def get_spark(config: EngineConfig | None = None) -> SparkSession:
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "48g")
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         # JVM unified logging goes to STDOUT by default, so a GC warning
         # (e.g. "[...][warning][gc,alloc] ... GCLocker ...") can interleave

@@ -1,4 +1,4 @@
-"""Staged restartable funnel: parity with pretrain_prep + resume semantics."""
+"""Staged restartable funnel: resume semantics + the pretrain_prep wrapper."""
 
 from __future__ import annotations
 
@@ -26,35 +26,18 @@ def _parquet_mtimes(path: str) -> dict[str, float]:
     }
 
 
-def test_staged_funnel_matches_pretrain_prep(spark, tmp_path):
-    docs = table(spark, SF_SMALL, "documents")
-    out = funnel.run_staged_funnel(spark, docs, str(tmp_path))
-    assert out["computed"] == list(funnel.STAGES)  # cold run computes all
-    staged = _report_rows(out["report"])
-    single_dag = _report_rows(QUERIES["pretrain_prep"](spark, SF_SMALL))
-    assert staged == single_dag
+def test_pretrain_prep_report_outlives_its_scratch_dir(spark, tmp_path, monkeypatch):
+    """pretrain_prep runs the staged funnel in a temporary directory: the
+    directory is gone when the call returns, and the returned report is
+    driver-built, so collecting it later reads no stage table."""
+    import tempfile
 
-
-def test_pretrain_prep_fused_boundary_metrics_exact(spark):
-    """r15 (verdict item 3 done-criterion): fusing the near_dedup →
-    decontaminated boundary into one action must leave every observe
-    metric EXACT — the double-counting risk that deferred the fusion in
-    r14 (an observe subtree referenced twice doubles its accumulators),
-    plus the filter-pushdown risk (the %10 benchmark filter sliding below
-    obs_near would exclude benchmark docs from the near_dedup row). Pin
-    the fused report row-for-row against the unfused r14 form on a corpus
-    where the stages actually differ (near-dup drops AND nonzero
-    contamination at SF_SMALL)."""
-    fused = _report_rows(QUERIES["pretrain_prep"](spark, SF_SMALL))
-    unfused = _report_rows(
-        QUERIES["pretrain_prep"](spark, SF_SMALL, fuse_report_stages=False)
-    )
-    assert fused == unfused
-    by_stage = {s: (d, t) for _, s, d, t in fused}
-    # the stages the fused boundary touches must be non-degenerate here,
-    # or this test pins nothing
-    assert by_stage["near_dedup"][0] < by_stage["exact_dedup"][0]
-    assert 0 < by_stage["decontaminated"][0] < by_stage["near_dedup"][0]
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    report = QUERIES["pretrain_prep"](spark, SF_SMALL)
+    assert os.listdir(tmp_path) == []
+    rows = _report_rows(report)
+    assert [s for _, s, _, _ in rows] == ["raw", *funnel.STAGES]
+    assert rows == _report_rows(report)  # re-collectable
 
 
 def test_staged_funnel_resumes_from_completed_stages(spark, tmp_path):
@@ -270,12 +253,10 @@ def test_funnel_applies_partition_plan_scoped(spark, tmp_path, monkeypatch):
     assert spark.conf.get("spark.sql.shuffle.partitions") == orig_shuffle
     assert spark.conf.get("spark.sql.files.maxPartitionBytes") == orig_split
 
-    # auto_partition=False is the no-op opt-out; geometry is not stage
-    # meta, so the r13-compatible workdir resumes with zero recompute
-    seen.clear()
-    again = funnel.run_staged_funnel(spark, docs, str(tmp_path), auto_partition=False)
+    # geometry is not stage meta, so a re-run over the same workdir
+    # resumes with zero recompute
+    again = funnel.run_staged_funnel(spark, docs, str(tmp_path))
     assert again["computed"] == []
-    assert not seen
 
 
 def test_funnel_cross_block_recovery_flag(spark, tmp_path):

@@ -80,7 +80,7 @@ ALLOWED = {
         "bounds": 2,
         # benchmark gram sets (eval-suite bounded); bench: +1 is the
         # bloom_decontaminate exact recheck over the screened subset
-        "bench": 3, "bench_grams": 1,
+        "bench": 3,
     },
 }
 

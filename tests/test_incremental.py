@@ -430,6 +430,29 @@ def test_blocked_incremental_rejects_duplicate_batch_ids(spark):
     assert (7, 8) in got
 
 
+def test_blocked_gate_reports_committed_ids_before_batch_dups(spark):
+    """A blocked batch that both overlaps the committed ids AND repeats ids
+    within itself always raises the committed-id error: the gate's 5-row
+    sample is ordered, so the six in-batch duplicate ids here can never
+    crowd the one committed overlap out of it."""
+    hist = spark.createDataFrame(
+        [(1, "totally different historical filler text with its own words", "en")],
+        ["doc_id", "text", "lang"],
+    )
+    hist_sigs = dedup.minhash_signature_table(
+        dedup.shingle_hash_rows(
+            hist.select(F.col("doc_id").alias("_id"), F.col("text").alias("_text"))
+        )
+    )
+    batch = spark.createDataFrame(
+        [(1, BASE, "en")]
+        + [(i, f"{BASE} variant {i}", "en") for i in range(7, 13) for _ in range(2)],
+        ["doc_id", "text", "lang"],
+    )
+    with pytest.raises(ValueError, match=r"already present in the committed snapshot \(e\.g\. \[1\]\)"):
+        dedup.minhash_incremental_pairs(hist, hist_sigs, batch, block_cols=["lang"])
+
+
 def test_persist_shingles_parity_and_contract(spark, tmp_path):
     """r13 space-for-time option: a persist_shingles cadence emits pair
     sets IDENTICAL to the text-reshingle cadence, never needs old_docs
@@ -637,58 +660,6 @@ def test_incremental_pre_r14_manifest_counts_sigs_fallback(spark, tmp_path):
     assert r2["version"] == 2
     # and the new commit re-records the stats for the next run
     assert json.load(open(mpath))["_stats"] == {"n_docs": 13}
-
-
-def test_incremental_auto_partition_opt_out(spark, tmp_path, monkeypatch):
-    from devcontainers_etl_node_spark.operators import dedup as dd
-
-    def boom(*a, **k):
-        raise AssertionError("applied_partition_plan must not be called")
-
-    monkeypatch.setattr(dd, "applied_partition_plan", boom)
-    wd = str(tmp_path / "wd")
-    out = run_incremental_dedup(spark, _corpus_a(spark), wd, auto_partition=False)
-    assert out["version"] == 1
-
-
-def test_manual_partition_batches_keep_stats_honest(spark, tmp_path, monkeypatch):
-    """r14 review fix: a batch committed with ``auto_partition=False``
-    must still advance the manifest's ``_stats.n_docs`` — otherwise every
-    LATER auto_partition run sizes its plan from a count that silently
-    excludes the manual batches, and the undercount never self-heals
-    (reproducing at scale the geometry failure auto_partition prevents).
-    When the history size is unknowable (pre-r14 manifest), the manual
-    run must leave ``_stats`` ABSENT rather than commit a wrong number."""
-    import json
-
-    from devcontainers_etl_node_spark.operators import dedup as dd
-
-    wd = str(tmp_path / "wd")
-    a, b = _corpus_a(spark), _corpus_b(spark)
-    run_incremental_dedup(spark, a, wd)  # auto run: _stats = 10
-    mpath = os.path.join(wd, "_MANIFEST.json")
-    assert json.load(open(mpath))["_stats"] == {"n_docs": 10}
-
-    def boom(*args, **kw):
-        raise AssertionError("applied_partition_plan must not be called")
-
-    monkeypatch.setattr(dd, "applied_partition_plan", boom)
-    run_incremental_dedup(spark, b, wd, old_docs=a, auto_partition=False)
-    assert json.load(open(mpath))["_stats"] == {"n_docs": 13}
-
-    # pre-r14 manifest (no _stats): the manual run leaves it absent —
-    # the next auto run falls back to counting the store
-    m = json.load(open(mpath))
-    del m["_stats"]
-    json.dump(m, open(mpath, "w"))
-    c = spark.createDataFrame(
-        [(201, "entirely new closing batch text one"), (202, "entirely new closing batch text two")],
-        ["doc_id", "text"],
-    )
-    run_incremental_dedup(
-        spark, c, wd, old_docs=a.unionByName(b), auto_partition=False
-    )
-    assert "_stats" not in json.load(open(mpath))
 
 
 # ---------------------------------------------------------------------------

@@ -28,6 +28,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession, functions as F
 
+from devcontainers_etl_node_spark.session import driver_memory
+
 # the experiment session needs the UI for the REST shuffle counters —
 # build it BEFORE anything calls session.get_spark (getOrCreate reuses it)
 spark = (
@@ -36,7 +38,7 @@ spark = (
     .config("spark.sql.shuffle.partitions", "64")
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    .config("spark.driver.memory", "48g")
+    .config("spark.driver.memory", driver_memory())
     .config("spark.ui.enabled", "true")
     .config("spark.ui.port", "4057")
     .getOrCreate()

@@ -71,11 +71,9 @@ def main() -> None:
     print("PARTITION-BY window exists; the warning on these bounded ones is")
     print("expected and safe.")
     print("Eagerly-materialized entries (minhash_neardup, ngram_jaccard,")
-    print("dup_clusters) print 0 exchanges: their work ran at construction and")
-    print("the remaining plan is a localCheckpoint scan — timings live in")
-    print("BENCH_r*.json, not here. `pretrain_prep` prints ~10 exchanges since")
-    print("the round-3 per-stage checkpointing (previously thousands: every")
-    print("funnel stage re-referenced the full upstream lineage).")
+    print("dup_clusters, pretrain_prep) print 0 exchanges: their work ran at")
+    print("construction and the remaining plan is a localCheckpoint scan or a")
+    print("driver-built report — timings live in BENCH_r*.json, not here.")
     print()
     print("| query | joins | exchanges | partial agg | pushed filters | flags |")
     print("|---|---|---|---|---|---|")
